@@ -1,8 +1,10 @@
 """Headline benchmark — prints ONE JSON line the driver records.
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS]. Each query is materialized with a count-only
-action (driver-side collect of results is not part of engine cost).
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on;
+both land in the JSON line as ``sf_dir`` and ``cpus``). Each query is
+materialized with a count-only action (driver-side collect of results
+is not part of engine cost).
 One warm-up pass amortizes JVM/codegen startup, mirroring how
 BASELINE.md measured (warm, post-JIT single runs).
 """
@@ -39,10 +41,7 @@ def main() -> None:
 
     from systematic_review_classification_spark import all_queries, get_session
 
-    spark = get_session(
-        app_name="systematic-review-classification-spark-bench",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-    )
+    spark = get_session(app_name="systematic-review-classification-spark-bench")
     queries = all_queries()
     keys = [k for k in HEADLINE if k in queries]
 
@@ -171,6 +170,8 @@ def main() -> None:
         "runs": runs,
         "value_basis": "sum of per-query medians (r1-r4: best-of-2 mins)",
         "sf": float(sf),
+        "sf_dir": sf_dir,
+        "cpus": spark.sparkContext.defaultParallelism,
         "load1": round(load1, 2),
         "load15": round(load15, 2),
         "uptime_sec": round(uptime_sec, 1),

@@ -237,12 +237,13 @@ def hashed_sets(df, col: str):
     well under 1 for vocabularies to ~10⁸ distinct tokens) the helper
     returns the original string arrays: same results, pre-r12 speed.
     The guard itself is one linear token-stream aggregate with partial
-    (map-side) distinct — no driver data transfer beyond two counts.
+    (map-side) distinct — no driver data transfer beyond three counts.
 
-    Preconditions (hold at every call site): array elements are
-    non-NULL (split()/filtered shingle outputs — countDistinct ignores
-    NULLs, xxhash64(NULL) does not, so a NULL element could evade the
-    guard); both intersect operands derive from THIS df's ``col``.
+    NULL elements: countDistinct ignores them, xxhash64(NULL) does
+    not, so a NULL element could offset a real collision in the count
+    comparison. The same aggregate counts NULL elements, and any NULL
+    element keeps the string arrays. Precondition (holds at every call
+    site): both intersect operands derive from THIS df's ``col``.
     NULL arrays (NULL text) propagate NULL through transform exactly
     as through the string path."""
     probe = (
@@ -250,10 +251,11 @@ def hashed_sets(df, col: str):
         .agg(
             F.countDistinct("_t").alias("d"),
             F.countDistinct(F.xxhash64("_t")).alias("h"),
+            F.count_if(F.col("_t").isNull()).alias("n"),
         )
         .first()
     )
-    if probe["d"] != probe["h"]:  # collision: keep exact strings
+    if probe["n"] or probe["d"] != probe["h"]:  # NULL or collision: keep exact strings
         return df
     return df.withColumn(
         col, F.transform(F.col(col), lambda x: F.xxhash64(x))

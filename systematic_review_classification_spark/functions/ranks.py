@@ -112,8 +112,10 @@ def global_prefix_min_excl(
     ``least`` (which skips the NULL offset of partition 0 and the NULL
     in-partition min of each partition's first row). ``min``/``least``
     ignore NULL values, so NULL ``value`` rows never pollute the
-    prefix, matching ``min() OVER`` semantics. Added r12 for the
-    skyline sweep (wl_pareto_frontier)."""
+    prefix, matching ``min() OVER`` semantics. NULL ``*order`` keys
+    are not skipped: they sort first, so filter them out beforehand
+    when they must not precede every row. Added r12 for the skyline
+    sweep (wl_pareto_frontier)."""
     d = df.repartitionByRange(*order).withColumn("_pid", F.spark_partition_id())
     pstats = d.groupBy("_pid").agg(F.min(F.col(value)).alias("_pmin"))
     w_prev = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)

@@ -4384,10 +4384,15 @@ def wl_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (functions/ranks.global_prefix_min_excl — never a single-task
     # window); re-attach is one equi-join on price. NULL price/size
     # rows: every comparison is NULL in both forms → never dominated,
-    # never dominating (min ignores NULLs; the NULL-price group never
-    # equi-joins; coalesce keeps the row). O(n²) → O(n) + sort shuffle.
-    g = p.groupBy(F.col("p_retailprice").alias("_pr")).agg(
-        F.min("p_size").alias("_m_eq")
+    # never dominating (min ignores NULL sizes; the left join +
+    # coalesce keeps NULL-price rows). The NULL-price group is dropped
+    # before the sweep: Spark sorts NULLs first, so its size would
+    # otherwise feed every real price's strictly-cheaper min.
+    # O(n²) → O(n) + sort shuffle.
+    g = (
+        p.where(F.col("p_retailprice").isNotNull())
+        .groupBy(F.col("p_retailprice").alias("_pr"))
+        .agg(F.min("p_size").alias("_m_eq"))
     )
     g = global_prefix_min_excl(g, "_m_eq", F.col("_pr"), out_col="_m_lt")
     dominated = (F.col("_m_lt") <= F.col("p_size")) | (

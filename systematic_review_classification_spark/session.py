@@ -21,6 +21,11 @@ Config rationale (SURVEY.md §1.4, §6):
 * shuffle partitions sized to cores, AQE on — at bench scale (600k
   rows) 200 shuffle partitions is pure scheduling overhead; at cluster
   scale AQE coalesces/splits at runtime anyway.
+
+Host fit: with ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY`` unset,
+the session takes the CPUs this process may run on (the affinity mask,
+what ``nproc`` reports) and a driver heap of half the physical memory,
+capped at 24g — a fixed 24g heap overcommits a 15 GB host.
 """
 
 from __future__ import annotations
@@ -45,9 +50,14 @@ def ensure_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
 
 
+def _host_heap() -> str:
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, ram_mb // 2)}m"
+
+
 def get_session(app_name: str = "systematic-review-classification-spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -55,7 +65,7 @@ def get_session(app_name: str = "systematic-review-classification-spark", cpus: 
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _host_heap())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )

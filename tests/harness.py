@@ -30,6 +30,11 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def plan_of(df, mode: str = "formatted") -> str:
+    """The physical plan as ``df.explain(mode)`` prints it."""
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
+
+
 def _norm_cell(v):
     if v is None:
         return NULL

@@ -13,18 +13,19 @@ Two failure classes have each cost a full external-verification round:
    registry (the JVM-wide WindowExec warning is log4j-silenced in
    session.py, so nothing else would).
 
-Both checks run one pass over all registered queries: build the lazy
-DataFrame, record schema and formatted physical plan, assert. Heavy
-(~4 min for the full registry) but it turns a burned driver round
-into a local test failure.
+Both checks read the session-scoped ``surfaces`` fixture
+(tests/conftest.py): one pass over all registered queries that builds
+each lazy DataFrame and records its schema and formatted physical
+plan. Heavy (~3 min for the full registry, shared with the plan lint)
+but it turns a burned driver round into a local test failure.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import types as T
 
-from systematic_review_classification_spark import all_oracles, all_queries
+from systematic_review_classification_spark import all_oracles
+from tests.harness import plan_of
 
 # Keys allowed to keep an unpartitioned window: must be a window over
 # a PROVABLY BOUNDED relation (a reduced aggregate whose cardinality
@@ -110,20 +111,6 @@ def _unpartitioned_window_lines(plan: str) -> list[str]:
     return out
 
 
-@pytest.fixture(scope="module")
-def surfaces(spark, sf_dir):
-    """key -> (schema, formatted physical plan) for every registered
-    query, built once."""
-    out = {}
-    for key, fn in all_queries().items():
-        df = fn(spark, sf_dir)
-        plan = spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        out[key] = (df.schema, plan)
-    return out
-
-
 def test_oracled_outputs_are_scalar(surfaces):
     """Every oracled key must emit only scalar top-level columns —
     anything else is invisible to the driver's pandas canonicalizer
@@ -160,11 +147,6 @@ def test_unpartitioned_window_canary(spark, sf_dir):
     from pyspark.sql import Window, functions as F
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    def plan_of(df):
-        return spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-
     bad_ordered = li.withColumn(
         "rn", F.row_number().over(Window.orderBy("l_extendedprice"))
     )

@@ -334,7 +334,10 @@ def test_symmetric_series_forecast_negzero_parity(spark, synth_symmetric_events_
     helper must normalize the sign identically on both engines."""
     con = _con_for(synth_symmetric_events_dir, "events")
     # precondition: without the + 0.0 normalizer the oracle's own
-    # GROUP BY path still produces the signed zero this test freezes
+    # GROUP BY path still produces the signed zero this test freezes.
+    # The sign follows DuckDB's accumulation order: one thread gives
+    # -0.0 every time, four threads gave +0.0 in 7 of 20 runs.
+    con.execute("SET threads=1")
     sgn = con.execute(
         "WITH daily AS (SELECT datediff('day', DATE '2024-01-01', "
         "CAST(date_trunc('day', ts) AS DATE)) AS t, "
@@ -452,3 +455,50 @@ def test_try_cast_family_survives_dirty_inputs(spark, synth_dirty_cast_lineitem_
     assert out[5] == (5, None)
     assert out[6] == (7, None)
     con.close()
+
+
+@pytest.mark.parametrize(
+    "parts",
+    [
+        [(1, None, 1), (2, 10.0, 5), (3, 20.0, 3)],
+        [(1, 5.0, None), (2, 10.0, 5), (3, 20.0, 3)],
+    ],
+    ids=["null_price", "null_size"],
+)
+def test_pareto_frontier_null_price_or_size(spark, tmp_path, parts):
+    """wl_pareto_frontier with a NULL price (real size) or a NULL size
+    (real price): every comparison with the NULL is unknown, so that
+    part neither dominates nor is dominated and all three parts are on
+    the frontier. Spark sorts NULLs first, so a NULL-price group that
+    reaches the skyline sweep dominates every real price."""
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE p (p_partkey BIGINT, p_brand VARCHAR, "
+        "p_retailprice DOUBLE, p_size INTEGER)"
+    )
+    con.executemany("INSERT INTO p VALUES (?, 'Brand#11', ?, ?)", parts)
+    con.execute(f"COPY p TO '{tmp_path}/part.parquet' (FORMAT PARQUET)")
+    con.close()
+    con = _con_for(str(tmp_path), "part")
+    compare(
+        QUERIES["wl_pareto_frontier"](spark, str(tmp_path)),
+        con,
+        ORACLES["wl_pareto_frontier"],
+        key="wl_pareto_frontier@nulls",
+    )
+    con.close()
+
+
+def test_hashed_sets_keeps_arrays_with_null_elements(spark):
+    """hashed_sets' guard compares distinct tokens with distinct hashes;
+    countDistinct skips a NULL element while xxhash64(NULL) is a value,
+    so a NULL could offset a real collision. Any NULL element keeps the
+    string arrays; the NULL-free rows still hash."""
+    from systematic_review_classification_spark.functions.predicates import hashed_sets
+
+    df = spark.createDataFrame(
+        [(1, ["a", None, "b"]), (2, ["b", "c"])], "id INT, toks ARRAY<STRING>"
+    )
+    assert hashed_sets(df, "toks") is df
+    clean = hashed_sets(df.where("id = 2"), "toks")
+    assert clean.schema["toks"].dataType.simpleString() == "array<bigint>"

@@ -10,7 +10,7 @@ quietly introduce one in a key nobody pinned:
   (a no-group-key aggregate is exactly 1 row; a literal relation is
   fixed-size); fatal when both sides scale with data. Every key
   allowed to carry one is enumerated below with the bounded side
-  named — evidence regenerable via ``python tools/plan_audit.py``.
+  named — evidence regenerable via ``python tools/sweep.py audit``.
 - ``BatchEvalPython`` — row-at-a-time Python, the slow path. Allowed
   only for the two §2.L contract keys whose PURPOSE is the row-UDF
   correctness twin.
@@ -27,10 +27,9 @@ with rows.
 
 from __future__ import annotations
 
-from systematic_review_classification_spark import all_oracles, all_queries
+from systematic_review_classification_spark import all_queries
 
 QUERIES = all_queries()
-ORACLES = all_oracles()
 
 # Keys allowed to plan a non-equi join (CartesianProduct or
 # BroadcastNestedLoopJoin) — bounded side documented per family.
@@ -118,16 +117,9 @@ NONEQUI_OK = {
 ROW_PYTHON_OK = {"udf_python", "udtf_python"}
 
 
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def test_registry_nonequi_and_row_python_lint(spark, sf_dir):
+def test_registry_nonequi_and_row_python_lint(surfaces):
     bad: list[tuple[str, str]] = []
-    for key, fn in QUERIES.items():
-        s = _plan(fn(spark, sf_dir))
+    for key, (_, s) in surfaces.items():
         nonequi = ("CartesianProduct" in s) or ("BroadcastNestedLoopJoin" in s)
         if nonequi and key not in NONEQUI_OK:
             bad.append((key, "unvetted non-equi join (Cartesian/BNLJ)"))

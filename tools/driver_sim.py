@@ -1,6 +1,6 @@
 """Simulate the external driver: vanilla session, import contract, smoke + t2."""
-import sys
-sys.path.insert(0, "/root/repo")
+import os, sys
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 # deliberately vanilla: no nanosAsLong, no UTC tz — the driver's session, not ours
